@@ -48,16 +48,15 @@ def persist_batch(
     cfg: DeserializerConfig | None = None,
     polymorphic_types: dict[str, list[str]] | None = None,
     dead_letter_store: SnapshotStore | None = None,
-    reconcile_children: bool = True,
 ) -> PersistResult:
     """One micro-batch, end to end. ``raw`` carries a ``value`` column of
     envelope JSON (Kafka-shaped; NULL value = tombstone). Unknown event
     names go to the dead-letter store (T9, F4).
 
-    ``reconcile_children`` applies J4 after each has_many upsert: a
-    parent's aggregate payload is authoritative for its child set, so
-    stored children of the batch's parents that the payload no longer
-    lists are deleted (persistor.rb:128-151's ``where.not(id: ids)``)."""
+    J4 runs after each has_many upsert: a parent's aggregate payload is
+    authoritative for its child set, so stored children of the batch's
+    parents that the payload no longer lists are deleted
+    (persistor.rb:128-151's ``where.not(id: ids)``)."""
     cfg = cfg or DeserializerConfig()
     result = PersistResult()
 
@@ -143,7 +142,7 @@ def persist_batch(
             store = sinks[ent.entity].store
             store.merge(spark, frame)
             tallies.append(frame.select(F.lit(ent.entity).alias("__entity")))
-            if reconcile_children and ent.relationship == "has_many":
+            if ent.relationship == "has_many":
                 current = store.read(spark)
                 if current is not None and "synced_parent_id" in current.columns:
                     parents = frame.select("synced_parent_id").distinct()

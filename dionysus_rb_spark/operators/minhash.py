@@ -224,12 +224,12 @@ def minhash_lsh_dedup(
 class GateDecision:
     """A delta gate's decision frame plus a ``release()`` handle for
     the gate's pinned intermediate relations (the delta/corpus shingle
-    frames and, on the indexed path, the candidate frame). Persisted
-    relations otherwise live for the whole session, and this operator's
-    cadence is per-DELIVERY: a curation loop that gates a batch, admits
-    it, and moves on must be able to free each gate's pinned
-    corpus-sized state (ADVICE r9 item 2 — the same session-
-    accumulation failure mode SplitResult.release fixed for ingest).
+    frames). Persisted relations otherwise live for the whole session,
+    and this operator's cadence is per-DELIVERY: a curation loop that
+    gates a batch, admits it, and moves on must be able to free each
+    gate's pinned corpus-sized state (ADVICE r9 item 2 — the same
+    session-accumulation failure mode SplitResult.release fixed for
+    ingest).
     Call ``release()`` once the decision has been consumed (collected /
     written / counted); a released decision is still valid — later
     actions just recompute from source. Also a context manager:
@@ -330,10 +330,10 @@ def delta_dedup_gate(
     sb = sh_i.select(
         F.col("doc_id").alias("index_id"), F.col("shingle_set").alias("__sb")
     )
-    decision, pinned = _gate_against(
+    decision = _gate_against(
         delta, id_col, sh_d, bd, bi, sb, threshold, max_bucket
     )
-    return GateDecision(decision, [sh_d, sh_i, *pinned])
+    return GateDecision(decision, [sh_d, sh_i])
 
 
 def _gate_against(
@@ -342,28 +342,17 @@ def _gate_against(
     sh_d: DataFrame,
     bd: DataFrame,
     bi: DataFrame,
-    sb: DataFrame | None,
+    sb: DataFrame,
     threshold: float,
     max_bucket: int | None,
-    shingle_loader=None,
     exclude_self: bool = False,
     overcap_keys: DataFrame | None = None,
-) -> tuple[DataFrame, list[DataFrame]]:
+) -> DataFrame:
     """The join half of the delta gate, shared by the inline and the
     persisted-index paths: band-bucket join -> exact-Jaccard verify ->
     distinct-match count -> per-delta-doc decision. ``bd``/``bi`` are
     (delta_id|index_id, band_key) rows; ``sb`` is (index_id, __sb
-    shingle_set); ``sh_d`` is the delta shingle frame.
-
-    ``shingle_loader`` (indexed path) replaces the static ``sb`` with a
-    callable that receives the MATERIALIZED candidate frame and returns
-    the shingle relation to verify against — the hook that lets the
-    file-backed gate prune its corpus-sized shingle scan down to the
-    candidates' ids (VERDICT r9 item 3). When set, candidates are
-    persisted (they feed both the loader's id probe and the verify
-    join) and returned in the pinned list for GateDecision.release."""
-    from pyspark.storagelevel import StorageLevel
-
+    shingle_set); ``sh_d`` is the delta shingle frame."""
     if max_bucket is not None:
         if overcap_keys is not None:
             # indexed path with width sidecars: the over-cap key set
@@ -399,11 +388,6 @@ def _gate_against(
         # satisfy the inequality and are dropped — ids must be non-null
         # keys under this flag.
         cand = cand.filter(F.col("delta_id") != F.col("index_id"))
-    pinned: list[DataFrame] = []
-    if shingle_loader is not None:
-        cand = cand.persist(StorageLevel.MEMORY_AND_DISK)
-        pinned.append(cand)
-        sb = shingle_loader(cand)
     sa = sh_d.select(
         F.col("doc_id").alias("delta_id"), F.col("shingle_set").alias("__sa")
     )
@@ -418,7 +402,7 @@ def _gate_against(
         .groupBy("delta_id")
         .agg(F.count_distinct("index_id").alias("__n"))
     )
-    decision = (
+    return (
         delta.select(F.col(id_col).alias("doc_id"))
         .join(matches.withColumnRenamed("delta_id", "doc_id"), "doc_id", "left")
         .select(
@@ -431,7 +415,6 @@ def _gate_against(
             .alias("kept"),
         )
     )
-    return decision, pinned
 
 
 _INDEX_MANIFEST = "_dedup_index_manifest.json"
@@ -470,36 +453,6 @@ BAND_ROWS_PER_FILE = 4_000_000
 SHINGLE_ROWS_PER_FILE = 500_000
 BAND_ROWS_PER_TASK = 1_000_000
 SHINGLE_DOCS_PER_TASK = 125_000
-
-# Collect-size ceiling for the OPT-IN candidate-id probe: when the
-# pruned scan shape is engaged (see PRUNE_MIN_INDEX_DOCS for the
-# measured verdict on WHEN that is worth it), at most this many
-# DISTINCT candidate index ids are collected and pushed into the
-# shingle scan as an IN filter against its index_id-sorted files. The
-# collect is bounded by this constant (plan-collect lint); a wider
-# candidate set falls back to the full-scan join unchanged — at the
-# cost of the exact distinct+count the overflow check runs first, so
-# pinning the probe on (prune_min_index_docs=0) assumes candidate sets
-# that USUALLY fit under this ceiling (ADVICE r10 item 2).
-PRUNE_MAX_IDS = 100_000
-
-# Index size (live docs, summed from segment commit markers) below
-# which the gate full-scans the shingle store instead of probing. Set
-# PAST the measured range on purpose: controlled within-session A/Bs
-# (SCALING.md r10) had full-scan WINNING at both measured decades —
-# ~1.1-1.3x at a 1M corpus and ~1.45x at 10M (2.5M-doc delta) — because
-# near-dup candidates' index ids are uniformly spread, and a >10-value
-# IN pushdown collapses to a min/max range (spark.sql.parquet.pushdown.
-# inFilterThreshold), so NO row group skips and the pruned path pays
-# its probe + candidate-materialization barrier for zero I/O savings.
-# The pruned path stays available (prune_min_index_docs=0 pins it on)
-# for the regime it genuinely serves: a delivery whose candidate ids
-# CLUSTER in id range (e.g. monotonically-assigned ids where dups
-# concentrate in recent docs) against a store on cold/object storage,
-# where sorted-file row-group stats do skip. On a cluster the
-# scale-out answer is bucketing the shingle store on index_id so the
-# verify join co-locates — see build_dedup_index's docstring.
-PRUNE_MIN_INDEX_DOCS = 25_000_000
 
 # Tiered-compaction carry factor (VERDICT r12 item 1): a candidate
 # segment joins the merge group only while its doc count is at most
@@ -724,8 +677,8 @@ def _land_segment(
     globally range-partitioned: the range sampler costs a second full
     tokenize+shingle pass and its file-count-sized partitioning
     collapsed the sort onto 1-2 tasks) — sorted files keep every parquet
-    ROW GROUP's index_id min/max tight, which is what the gate's pushed
-    IN filter prunes on (VERDICT r9 item 3)."""
+    ROW GROUP's index_id min/max tight, so any index_id-filtered read of
+    the store skips row groups."""
     from ..sources.corpus_sink import _fs_write_text
 
     seg_path = f"{root}/{_SEGMENTS_DIR}/{seg}"
@@ -778,9 +731,9 @@ def _land_segment(
         spark,
         f"{seg_path}/{_SEG_COMMIT}",
         # n_docs rides the commit marker so readers can size the index
-        # without scanning it: the gate's scan-shape pick (pruned IN
-        # probe vs full-scan join) sums live segments' counts from
-        # these few-byte files instead of running a count job per gate.
+        # without scanning it: size-tiered compaction (_tier_merge_group)
+        # picks its merge group from these few-byte files instead of
+        # running a count job per segment.
         # It is an UPPER-BOUND HEURISTIC, not a live-doc census (ADVICE
         # r10 item 4): build/append record the pre-filter input count
         # (zero-token docs included), and a tagged replay straddling a
@@ -818,9 +771,7 @@ def build_dedup_index(
 
     - ``<path>/segments/e<epoch>-<mode>-<nonce>/bands`` — (index_id,
       band_key) rows clustered on band_key into size-targeted files;
-    - ``.../shingles`` — (index_id, __sb) in files sorted on index_id
-      (tight row-group min/max stats serve the gate's pruned verify
-      scan);
+    - ``.../shingles`` — (index_id, __sb) in files sorted on index_id;
     - ``.../_seg_commit.json`` — the segment's commit marker, created
       LAST: a segment without a parseable marker does not exist to any
       reader, so a crash at ANY point of a build or append yields
@@ -883,10 +834,10 @@ def build_dedup_index(
 
     At 100 TB: the corpus pays its shingle+signature cost once; each
     arriving delta pays one band-key join against the committed
-    segments plus a candidate-pruned verify scan. On a cluster the
-    bands relation belongs in a band_key-bucketed table so the gate
-    join co-locates without a shuffle; plain parquet (this function)
-    still confines the per-delta cost to one keyed shuffle per side.
+    segments plus one streaming verify scan of the shingle store, so
+    the per-delta cost is one keyed shuffle per side. Band_key-bucketed
+    tables would make the corpus side exchange-free, but measured 0.93x
+    against this layout on one host at 10M (SCALING.md r11).
     """
     from contextlib import nullcontext
 
@@ -1005,13 +956,13 @@ def build_dedup_index(
                 spark, root, manifest["epoch"], reclaim_ttl, reclaim_grace
             )
         # n_docs sizes the segment's file counts and rides the commit
-        # marker for the gate's scan-shape pick, so the INPUT row count
+        # marker for tiered compaction, so the INPUT row count
         # (parquet-stats cheap) is the right instrument — it may
         # slightly overcount vs the zero-token-filtered shingle frame,
-        # which only rounds a file target and biases the shape pick
-        # conservatively. Deliberately NO persist of the shingle frame
-        # here: caching 7.5M heavy shingle arrays to size two writes
-        # cost 6.6x the build in the r10 same-session A/B (654 s vs the
+        # which only rounds a file target and a tier boundary.
+        # Deliberately NO persist of the shingle frame here: caching
+        # 7.5M heavy shingle arrays to size two writes cost 6.6x the
+        # build in the r10 same-session A/B (654 s vs the
         # then-fastest variant; honest standalone build numbers are in
         # SCALING.md r10 — the r9-era 98.8 s figure was cache-
         # flattered); streaming the tokenize+shingle pass once per
@@ -1265,16 +1216,14 @@ def _open_dedup_index(
     exclude_segment_tag: str | None = None,
     expect_lineage: str | None = None,
 ):
-    """(manifest, band paths, shingle paths, indexed-doc total,
-    band-width sidecar paths) for the index's LIVE segments — committed
-    markers only, compaction-superseded excluded. The doc total is
-    summed from the markers' ``n_docs`` (None when any live marker
-    predates that field) so the gate can pick its scan shape without a
-    count job. The width-path list is None when ANY live segment
-    predates the sidecar (pre-r11 writer) — the gate then falls back to
-    the count-window cap. ``exclude_segment_tag`` drops the live APPEND
-    segment carrying that tag — the replay-identity hook (see
-    delta_dedup_gate_indexed). Matched as the EXACT name
+    """(manifest, band paths, shingle paths, band-width sidecar paths)
+    for the index's LIVE segments — committed markers only,
+    compaction-superseded excluded. The width-path list is None when
+    ANY live segment predates the sidecar (pre-r11 writer) — the gate
+    then falls back to the count-window cap. ``exclude_segment_tag``
+    drops the live APPEND segment carrying that tag — the
+    replay-identity hook (see delta_dedup_gate_indexed). Matched as the
+    EXACT name
     ``e<epoch>-append-<tag>`` built from THIS function's single
     manifest read (ADVICE r11 item 3: two manifest reads racing a
     concurrent overwrite could mismatch the epoch and silently disable
@@ -1317,20 +1266,6 @@ def _open_dedup_index(
                     "lineage (or restore the matching checkpoint)"
                 )
         live = [s for s in live if s != excluded]
-    counts = [segs[s].get("n_docs") for s in live]
-    # bool is an int subclass and a corrupt/hand-edited marker could
-    # hold true/-5 (ADVICE r10 item 1): anything but a non-negative
-    # real int reads as unknown (None) — the same fail-safe-to-full-
-    # scan path a missing field already takes
-    n_docs = (
-        sum(counts)
-        if counts
-        and all(
-            isinstance(c, int) and not isinstance(c, bool) and c >= 0
-            for c in counts
-        )
-        else None
-    )
     segdir = f"{root}/{_SEGMENTS_DIR}"
     from ..sources.corpus_sink import _fs_exists
 
@@ -1341,7 +1276,6 @@ def _open_dedup_index(
         manifest,
         [f"{segdir}/{s}/bands" for s in live],
         [f"{segdir}/{s}/shingles" for s in live],
-        n_docs,
         width_paths,
     )
 
@@ -1387,12 +1321,9 @@ def delta_dedup_gate_indexed(
     id_col: str = "doc_id",
     threshold: float = 0.7,
     max_bucket: int | None = 1000,
-    prune_max_ids: int | None = PRUNE_MAX_IDS,
-    prune_min_index_docs: int = PRUNE_MIN_INDEX_DOCS,
     exclude_self: bool = False,
     exclude_segment_tag: str | None = None,
     segment_lineage: str | None = None,
-    use_width_sidecars: bool = True,
 ) -> GateDecision:
     """Gate a delta batch against a PERSISTED dedup index
     (:func:`build_dedup_index`) — result-identical to
@@ -1404,25 +1335,15 @@ def delta_dedup_gate_indexed(
     resolved from the per-segment band-width SIDECARS when every live
     segment carries one, so capping costs an anti join against a
     degenerate-key-sized frame instead of a count window over all live
-    band rows; ``use_width_sidecars=False`` or a pre-sidecar segment
-    falls back to the window, decisions identical).
+    band rows; an index holding a pre-sidecar segment falls back to the
+    window, decisions identical).
 
     Per-delivery cost: one keyed join of the delta's band rows against
     the committed band segments, then a verify join streaming the
     shingle store once (the store side never shuffles when the
     candidate side broadcasts, and a single sequential columnar pass is
-    the measured-fastest shape at every decade tried — SCALING.md r10).
-    A candidate-id PRUNED scan exists as the alternative shape: the
-    candidates' index ids are collected (bounded by ``prune_max_ids``;
-    a wider set falls back to the full scan without collecting) and
-    pushed into the store scan as an IN filter against its
-    index_id-sorted files. It only engages when the markers' summed doc
-    count reaches ``prune_min_index_docs`` — set past the measured
-    range by default, because controlled A/Bs at 1M and 10M both had
-    the full scan WINNING (uniform candidate ids defeat row-group
-    skipping; see PRUNE_MIN_INDEX_DOCS). ``prune_max_ids=None`` pins
-    full-scan, ``prune_min_index_docs=0`` pins the probe on (the
-    clustered-candidate / cold-storage regime). Returns a
+    the measured-fastest shape at every decade tried — SCALING.md r10,
+    where a candidate-id pruned scan lost at 1M and 10M). Returns a
     :class:`GateDecision` — call ``release()`` after consuming it
     (per-delivery loops otherwise accumulate pinned relations for the
     session lifetime).
@@ -1456,13 +1377,7 @@ def delta_dedup_gate_indexed(
     from pyspark.storagelevel import StorageLevel
 
     spark = delta.sparkSession
-    (
-        manifest,
-        band_paths,
-        shingle_paths,
-        n_indexed,
-        width_paths,
-    ) = _open_dedup_index(
+    manifest, band_paths, shingle_paths, width_paths = _open_dedup_index(
         spark, index_path, exclude_segment_tag, expect_lineage=segment_lineage
     )
     if not band_paths:
@@ -1489,271 +1404,26 @@ def delta_dedup_gate_indexed(
     # bucket-cap shape: when every live segment carries the band-width
     # sidecar, the over-cap keys come from the sidecar sums and the cap
     # is an anti join (no exchange over corpus band rows — VERDICT r10
-    # item 2); a pre-sidecar segment or use_width_sidecars=False falls
-    # back to the count window, decisions identical (pinned by test)
+    # item 2); a pre-sidecar segment falls back to the count window,
+    # decisions identical (pinned by test)
     overcap = (
         _overcap_band_keys(spark, width_paths, max_bucket)
-        if max_bucket is not None and use_width_sidecars and width_paths
+        if max_bucket is not None and width_paths
         else None
     )
-    # scan-shape pick: the full-scan streaming join won every measured
-    # A/B (see PRUNE_MIN_INDEX_DOCS), so it is the default everywhere
-    # the markers don't prove the index enormous — including legacy
-    # markers without n_docs (unknown size), where the probe would pay
-    # its fixed cost with no evidence of I/O savings; pinning
-    # prune_min_index_docs=0 still forces the probe on either way
-    if prune_min_index_docs > 0 and (
-        n_indexed is None or n_indexed < prune_min_index_docs
-    ):
-        prune_max_ids = None
-    if prune_max_ids is None:
-        decision, pinned = _gate_against(
-            delta,
-            id_col,
-            sh_d,
-            bd,
-            bi,
-            spark.read.parquet(*shingle_paths).select("index_id", "__sb"),
-            threshold,
-            max_bucket,
-            exclude_self=exclude_self,
-            overcap_keys=overcap,
-        )
-    else:
-        loader = lambda cand: _pruned_shingles(  # noqa: E731
-            spark, shingle_paths, cand, prune_max_ids
-        )
-        decision, pinned = _gate_against(
-            delta,
-            id_col,
-            sh_d,
-            bd,
-            bi,
-            None,
-            threshold,
-            max_bucket,
-            shingle_loader=loader,
-            exclude_self=exclude_self,
-            overcap_keys=overcap,
-        )
-    return GateDecision(decision, [sh_d, *pinned])
-
-
-def build_dedup_index_bucketed(
-    index: DataFrame,
-    table_prefix: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-    num_perm: int = NUM_PERM,
-    bands: int = BANDS,
-    seed: int = 42,
-    n_buckets: int = 64,
-) -> None:
-    """The CLUSTER storage shape the parquet index's docstring promises
-    (VERDICT r10 item 3): the corpus band rows live in a metastore
-    table BUCKETED (and sorted) on band_key, the shingle store in one
-    bucketed on index_id, so a gate's two joins CO-LOCATE against them
-    — the corpus side of each join needs NO exchange at any delivery
-    size, which is the one regime where the plain-parquet gate pays a
-    per-delivery corpus-side shuffle: a delivery too big for AQE to
-    broadcast. Trade-offs vs :func:`build_dedup_index` (which remains
-    the default): a metastore dependency, no crash-atomic append/
-    compaction story (table overwrite is the only mutation — rebuild
-    per corpus version), and ``n_buckets`` fixed at build time.
-
-    MEASURED verdict (SCALING.md r11): on a single host the parquet
-    gate WINS the too-big-to-broadcast A/B (0.93× at 10M corpus /
-    2.5M delta, interleaved same-session) — local-mode shuffles are
-    memory-local, so the network transfer co-location eliminates on a
-    real cluster is nearly free, while the fixed bucket-file layout's
-    scan costs are real. This shape is OPT-IN for the regime
-    single-host measurement cannot model: multi-rack clusters where
-    the corpus-side exchange is network-bound.
-
-    Three tables are written under ``table_prefix``:
-    ``<prefix>_bands(index_id, band_key)`` bucketed+sorted on band_key;
-    ``<prefix>_shingles(index_id, __sb)`` bucketed+sorted on index_id;
-    ``<prefix>_meta`` — one row pinning the signature constants and
-    bucket count (the same can-never-drift contract as the parquet
-    manifest).
-
-    Rebuilds are self-cleaning across METASTORE lifetimes: a fresh
-    session's catalog does not know tables a previous session left in
-    the warehouse directory, and saveAsTable refuses a managed
-    location that already exists — so each table is dropped AND its
-    stale DEFAULT-MANAGED location deleted before the write.
-    ``table_prefix`` must be an unqualified identifier
-    (``[A-Za-z0-9_]+`` — the prefix names warehouse directories, so a
-    db-qualified or quoted name would desynchronize the catalog drop
-    from the directory cleanup), and a cataloged table whose resolved
-    location is NOT the expected managed path (someone created a
-    custom-location table under this name) is dropped from the catalog
-    but its data directory is left untouched (ADVICE r11 item 4 — the
-    old unconditional delete could destroy an unrelated directory
-    sharing the name in the warehouse root)."""
-    from urllib.parse import urlparse as _urlparse
-
-    from ..sources.corpus_sink import _fs_delete
-
-    if not table_prefix or not all(
-        c.isalnum() or c == "_" for c in table_prefix
-    ):
-        raise ValueError(
-            "table_prefix must be an unqualified identifier "
-            f"([A-Za-z0-9_]+), got {table_prefix!r}"
-        )
-    spark = index.sparkSession
-    warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    for suffix in ("_bands", "_shingles", "_meta"):
-        name = f"{table_prefix}{suffix}"
-        expected = f"{warehouse.rstrip('/')}/{name.lower()}"
-        location = None
-        cataloged = spark.catalog.tableExists(name)
-        if cataloged:
-            for r in spark.sql(f"DESCRIBE TABLE EXTENDED {name}").collect():
-                if r["col_name"] == "Location":
-                    location = r["data_type"]
-                    break
-            spark.sql(f"DROP TABLE {name}")
-        # delete the default managed directory only when it is (or, for
-        # a table this session's catalog never knew, would be) the
-        # dropped table's own data — a custom-location table's data is
-        # not ours to reclaim
-        managed_here = cataloged and location is not None and (
-            _urlparse(location).path.rstrip("/")
-            == _urlparse(expected).path.rstrip("/")
-        )
-        if not cataloged or managed_here:
-            _fs_delete(spark, expected)
-    sh_i = doc_shingles(index, text_col, id_col, k)
-    keys = band_keys_expr(bands, num_perm // bands)
-    signed = minhash_signature(sh_i, num_perm, seed)
-    (
-        signed.select(
-            F.col("doc_id").alias("index_id"),
-            F.explode(F.expr(keys)).alias("band_key"),
-        )
-        .write.mode("overwrite")
-        .bucketBy(n_buckets, "band_key")
-        .sortBy("band_key")
-        .saveAsTable(f"{table_prefix}_bands")
-    )
-    (
-        sh_i.select(
-            F.col("doc_id").alias("index_id"),
-            F.col("shingle_set").alias("__sb"),
-        )
-        .write.mode("overwrite")
-        .bucketBy(n_buckets, "index_id")
-        .sortBy("index_id")
-        .saveAsTable(f"{table_prefix}_shingles")
-    )
-    meta = spark.createDataFrame(
-        [(k, num_perm, bands, seed, n_buckets)],
-        "k int, num_perm int, bands int, seed long, n_buckets int",
-    )
-    meta.write.mode("overwrite").saveAsTable(f"{table_prefix}_meta")
-
-
-def delta_dedup_gate_bucketed(
-    delta: DataFrame,
-    table_prefix: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.7,
-    max_bucket: int | None = 1000,
-) -> GateDecision:
-    """Gate a delta batch against a BUCKETED-table index
-    (:func:`build_dedup_index_bucketed`) — decision-identical to
-    :func:`delta_dedup_gate` / the parquet-index gate over the same
-    corpus (pinned by test), with the corpus side of BOTH joins
-    exchange-free: the band join reads ``<prefix>_bands`` in band_key
-    bucket order (only the delivery's band rows shuffle, to the
-    bucket count), the verify join reads ``<prefix>_shingles`` in
-    index_id bucket order, and the bucket-cap widths come from a
-    groupBy the band_key bucketing satisfies without an exchange.
-    Signature constants come from ``<prefix>_meta``."""
-    from pyspark.storagelevel import StorageLevel
-
-    spark = delta.sparkSession
-    meta = spark.table(f"{table_prefix}_meta").collect()
-    if len(meta) != 1:
-        raise ValueError(
-            f"bucketed dedup index {table_prefix!r}: expected exactly one "
-            f"_meta row, found {len(meta)}"
-        )
-    row = meta[0]
-    k, num_perm, bands, seed = (
-        row["k"],
-        row["num_perm"],
-        row["bands"],
-        row["seed"],
-    )
-    sh_d = doc_shingles(delta, text_col, id_col, k).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    keys = band_keys_expr(bands, num_perm // bands)
-    bd = minhash_signature(sh_d, num_perm, seed).select(
-        F.col("doc_id").alias("delta_id"),
-        F.explode(F.expr(keys)).alias("band_key"),
-    )
-    bi = spark.table(f"{table_prefix}_bands")
-    overcap = None
-    if max_bucket is not None:
-        # the groupBy's required distribution is satisfied by the
-        # table's band_key bucketing: width aggregation without an
-        # exchange, exact peer of the parquet index's width sidecars
-        overcap = (
-            bi.groupBy("band_key")
-            .agg(F.count(F.lit(1)).alias("__w"))
-            .filter(F.col("__w") > max_bucket)
-            .select("band_key")
-        )
-    sb = spark.table(f"{table_prefix}_shingles")
-    decision, pinned = _gate_against(
+    decision = _gate_against(
         delta,
         id_col,
         sh_d,
         bd,
         bi,
-        sb,
+        spark.read.parquet(*shingle_paths).select("index_id", "__sb"),
         threshold,
         max_bucket,
+        exclude_self=exclude_self,
         overcap_keys=overcap,
     )
-    return GateDecision(decision, [sh_d, *pinned])
-
-
-def _pruned_shingles(
-    spark, shingle_paths: list[str], cand: DataFrame, max_ids: int
-) -> DataFrame:
-    """The shingle relation the verify join reads, pruned to the
-    candidate ids when they fit under ``max_ids``. The collect is
-    bounded by a count check against max_ids first, never by corpus or
-    delivery size — audited in tests/test_plan_collects.py. Count then
-    collect (two fully-parallel jobs over the persisted candidate
-    frame) rather than collecting through a limit(max_ids + 1):
-    CollectLimit executes its scan with the partition ramp-up (1, then
-    scaled-up batches) and a six-figure limit that is never reached
-    early runs the whole distinct near-serially — measured as most of
-    the probe's overhead at 1M."""
-    from pyspark.storagelevel import StorageLevel
-
-    sb = spark.read.parquet(*shingle_paths).select("index_id", "__sb")
-    ids_df = cand.select("index_id").distinct().persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    try:
-        n = ids_df.count()
-        if n > max_ids:
-            return sb  # candidate set too wide to push — full-scan join
-        if n == 0:
-            return sb.filter(F.lit(False))  # no candidates: verify is empty
-        ids = [r[0] for r in ids_df.collect()]
-    finally:
-        ids_df.unpersist()
-    return sb.filter(F.col("index_id").isin(ids))
+    return GateDecision(decision, [sh_d])
 
 
 # ---------------------------------------------------------------------------

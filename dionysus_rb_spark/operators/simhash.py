@@ -33,7 +33,7 @@ BITS = 32
 # sane max_bucket and get dropped, gutting recall. 60-bit fingerprints
 # band into 4 x 15 bits (32k values each), the regime where banding
 # keeps working. Certified end-to-end as dd_simhash_wide (round 6);
-# tools/validation/simhash_width.py is the re-runnable saturation study.
+# the saturation study is tools/validation/simhash_width.py @ 6813648.
 WIDE_BITS = 60
 
 

@@ -700,18 +700,21 @@ def test_dedup_index_file_counts_bounded(spark, tmp_path):
         assert sorted(map(tuple, d.collect())) == before
 
 
-def test_index_marker_doc_counts_drive_scan_shape(spark, tmp_path):
-    """Segment commit markers carry n_docs so the gate's scan-shape
-    pick reads a few bytes instead of running a count job: the open
-    helper sums LIVE segments' counts, appends add to the sum,
-    compaction preserves it, and a legacy marker without the field
-    makes the total read as unknown (None) — which, like a small known
-    total, defaults the gate to the measured-faster full scan."""
+def test_index_marker_doc_counts_track_live_segments(spark, tmp_path):
+    """Segment commit markers carry n_docs so size-tiered compaction
+    (_tier_merge_group) sizes segments from a few bytes instead of a
+    count job: each live segment's marker records its docs, an append
+    adds a segment with its own count, compaction preserves the total,
+    and a legacy marker without the field reads as unknown — which
+    tiered compaction leaves to a full compaction."""
     import json
     import os
 
     from dionysus_rb_spark.operators.minhash import (
-        _open_dedup_index,
+        _list_segments,
+        _live_segments,
+        _read_index_manifest,
+        _tier_merge_group,
         build_dedup_index,
         compact_dedup_index,
     )
@@ -726,14 +729,20 @@ def test_index_marker_doc_counts_drive_scan_shape(spark, tmp_path):
         )
 
     idx = str(tmp_path / "idx")
-    build_dedup_index(docs(0, 40), idx, k=3)
-    assert _open_dedup_index(spark, idx)[3] == 40
-    build_dedup_index(docs(100, 25), idx, k=3, mode="append")
-    assert _open_dedup_index(spark, idx)[3] == 65
-    compact_dedup_index(spark, idx, reclaim_grace=0.0)
-    assert _open_dedup_index(spark, idx)[3] == 65
 
-    # legacy marker (pre-n_docs writer): total degrades to unknown
+    def live_doc_counts() -> dict:
+        segs = _list_segments(spark, idx)
+        epoch = _read_index_manifest(spark, idx)["epoch"]
+        return {s: segs[s].get("n_docs") for s in _live_segments(segs, epoch)}
+
+    build_dedup_index(docs(0, 40), idx, k=3)
+    assert sorted(live_doc_counts().values()) == [40]
+    build_dedup_index(docs(100, 25), idx, k=3, mode="append")
+    assert sorted(live_doc_counts().values()) == [25, 40]
+    compact_dedup_index(spark, idx, reclaim_grace=0.0)
+    assert list(live_doc_counts().values()) == [65]
+
+    # legacy marker (pre-n_docs writer): the count reads as unknown
     seg_root = os.path.join(idx, "segments")
     (seg,) = os.listdir(seg_root)
     marker = os.path.join(seg_root, seg, "_seg_commit.json")
@@ -747,63 +756,10 @@ def test_index_marker_doc_counts_drive_scan_shape(spark, tmp_path):
     crc = os.path.join(seg_root, seg, "._seg_commit.json.crc")
     if os.path.exists(crc):
         os.remove(crc)
-    assert _open_dedup_index(spark, idx)[3] is None
-
-
-def test_indexed_gate_prune_paths_are_decision_identical(spark, tmp_path):
-    """VERDICT r9 item 3: the candidate-id pruned shingle scan is an
-    I/O strategy, not a semantic — decisions must be identical with the
-    default shape (full scan at this index size: the auto pick reads
-    the markers' doc counts against PRUNE_MIN_INDEX_DOCS), the probe
-    pinned on (prune_min_index_docs=0), the probe forced into overflow
-    fallback (prune_max_ids smaller than the candidate set), and
-    disabled (None); and a no-candidate delivery (nothing bands) admits
-    everything through the empty-prune branch."""
-    from pyspark.sql import functions as F
-
-    from dionysus_rb_spark.operators.minhash import (
-        build_dedup_index,
-        delta_dedup_gate,
-        delta_dedup_gate_indexed,
-    )
-    from dionysus_rb_spark.tables import load_table
-
-    from conftest import SF_DIR
-
-    docs = load_table(spark, SF_DIR, "documents")
-    delta = docs.filter(F.col("doc_id") % 4 == 0)
-    index = docs.filter(F.col("doc_id") % 4 != 0)
-    idx = str(tmp_path / "idx")
-    build_dedup_index(index, idx, "text", "doc_id", k=3)
-
-    def result(**kw):
-        with delta_dedup_gate_indexed(
-            delta, idx, "text", "doc_id", threshold=0.5, **kw
-        ) as d:
-            return sorted(map(tuple, d.collect()))
-
-    with delta_dedup_gate(
-        delta, index, "text", "doc_id", k=3, threshold=0.5
-    ) as d:
-        inline = sorted(map(tuple, d.collect()))
-    assert result() == inline  # auto shape (full scan at this size)
-    assert result(prune_min_index_docs=0) == inline  # probe pinned on
-    # overflow -> full scan without collecting
-    assert result(prune_min_index_docs=0, prune_max_ids=1) == inline
-    assert result(prune_max_ids=None) == inline  # probe disabled
-
-    # a delivery that shares no shingles with anything: zero candidates,
-    # the pruned loader takes its empty branch, everyone admits
-    fresh = spark.createDataFrame(
-        [(7_000_001, "qqq www eee rrr ttt yyy uuu iii ooo ppp")],
-        "doc_id long, text string",
-    )
-    with delta_dedup_gate_indexed(
-        fresh, idx, "text", "doc_id", threshold=0.5, prune_min_index_docs=0
-    ) as d:
-        assert [(r["n_dup_matches"], r["kept"]) for r in d.collect()] == [
-            (0, 1)
-        ]
+    assert live_doc_counts() == {seg: None}
+    # an unknown-size segment never joins a tiered merge group, even
+    # next to a small known one
+    assert _tier_merge_group({seg: None, "e1-append-x": 1}, 10**9) == []
 
 
 def test_gate_decision_release_unpersists(spark):
@@ -835,16 +791,21 @@ def test_width_sidecar_cap_is_decision_identical_and_sheds_window(
 ):
     """VERDICT r10 item 2: the bucket cap resolved from per-segment
     band-width sidecars is an execution strategy, not a semantic —
-    decisions must equal the count-window shape across cap values and
-    segment counts (single segment, multi-segment with cross-segment
-    width sums, and post-compaction), and the sidecar plan must carry
-    NO Window node (the window was the gate's only corpus-wide
-    exchange in the broadcast-delta regime)."""
+    decisions must equal the inline gate's count-window cap across cap
+    values and segment counts (single segment, multi-segment with
+    cross-segment width sums, and post-compaction), and the sidecar
+    plan must carry NO Window node (the window was the gate's only
+    corpus-wide exchange in the broadcast-delta regime). An index
+    holding a pre-sidecar segment falls back to the window, decisions
+    unchanged."""
+    import shutil
+
     from pyspark.sql import functions as F
 
     from dionysus_rb_spark.operators.minhash import (
         build_dedup_index,
         compact_dedup_index,
+        delta_dedup_gate,
         delta_dedup_gate_indexed,
     )
     from dionysus_rb_spark.tables import load_table
@@ -861,195 +822,46 @@ def test_width_sidecar_cap_is_decision_identical_and_sheds_window(
         index.filter(F.col("doc_id") % 8 != 1), idx, k=3, mode="append"
     )
 
-    def result(**kw):
+    def result(max_bucket):
         with delta_dedup_gate_indexed(
-            delta, idx, "text", "doc_id", threshold=0.5, **kw
+            delta, idx, "text", "doc_id", threshold=0.5, max_bucket=max_bucket
         ) as d:
             return sorted(map(tuple, d.collect()))
 
-    # cap=1 exercises the over-cap branch hard (most buckets dropped),
-    # cap=2 exercises cross-segment sums, default exercises the common
-    # nothing-over-cap shape; each must match the window fallback
-    for cap in (1, 2, 1000):
-        assert result(max_bucket=cap) == result(
-            max_bucket=cap, use_width_sidecars=False
-        ), f"sidecar cap diverged from window cap at max_bucket={cap}"
-    assert result(max_bucket=None) == result(
-        max_bucket=None, use_width_sidecars=False
-    )
+    inline_by_cap = {}
+    for cap in (1, 2, 1000, None):
+        with delta_dedup_gate(
+            delta, index, k=3, threshold=0.5, max_bucket=cap
+        ) as d:
+            inline_by_cap[cap] = sorted(map(tuple, d.collect()))
 
-    # plan shape: sidecar path has no Window; fallback has one
-    with delta_dedup_gate_indexed(delta, idx, threshold=0.5) as d:
-        sidecar_plan = d.df._jdf.queryExecution().executedPlan().toString()
-    with delta_dedup_gate_indexed(
-        delta, idx, threshold=0.5, use_width_sidecars=False
-    ) as d:
-        window_plan = d.df._jdf.queryExecution().executedPlan().toString()
-    assert "Window" not in sidecar_plan, (
+    def plan() -> str:
+        with delta_dedup_gate_indexed(delta, idx, threshold=0.5) as d:
+            return d.df._jdf.queryExecution().executedPlan().toString()
+
+    # cap=1 exercises the over-cap branch hard (most buckets dropped),
+    # cap=2 exercises cross-segment sums, 1000 the common nothing-over-
+    # cap shape, None no cap at all; each must match the inline window
+    for cap, inline in inline_by_cap.items():
+        assert result(cap) == inline, (
+            f"sidecar cap diverged from window cap at max_bucket={cap}"
+        )
+    assert "Window" not in plan(), (
         "sidecar cap must not run a count window over live band rows"
     )
-    assert "Window" in window_plan  # the fallback really is the window
 
     # post-compaction single segment: the zero-shuffle width filter
     compact_dedup_index(spark, idx, reclaim_grace=0.0)
     for cap in (1, 1000):
-        assert result(max_bucket=cap) == result(
-            max_bucket=cap, use_width_sidecars=False
-        )
+        assert result(cap) == inline_by_cap[cap]
 
     # legacy index (pre-sidecar segment): auto-fallback to the window,
     # same decisions
-    import shutil
-
     seg_root = tmp_path / "idx" / "segments"
     (seg,) = [s for s in seg_root.iterdir() if s.is_dir()]
     shutil.rmtree(seg / "band_widths")
-    legacy = result(max_bucket=2)
-    assert legacy == result(max_bucket=2, use_width_sidecars=False)
-
-
-def test_bucketed_index_gate_decision_identical_and_colocated(
-    spark, tmp_path
-):
-    """VERDICT r10 item 3: the bucketed-table index is a STORAGE shape,
-    not a semantic — gate decisions must equal the inline gate and the
-    parquet-index gate over the same corpus — and it must actually
-    co-locate: with broadcasts disabled (the big-delivery regime the
-    shape exists for), the bucketed gate's plan reads the bands/
-    shingles tables bucketed and carries strictly fewer shuffle
-    exchanges than the parquet gate's plan."""
-    import re
-
-    from pyspark.sql import functions as F
-
-    from dionysus_rb_spark.operators.minhash import (
-        build_dedup_index,
-        build_dedup_index_bucketed,
-        delta_dedup_gate,
-        delta_dedup_gate_bucketed,
-        delta_dedup_gate_indexed,
-    )
-    from dionysus_rb_spark.tables import load_table
-
-    from conftest import SF_DIR
-
-    docs = load_table(spark, SF_DIR, "documents")
-    delta = docs.filter(F.col("doc_id") % 4 == 0)
-    index = docs.filter(F.col("doc_id") % 4 != 0)
-    prefix = "t_bkt_gate"
-    build_dedup_index_bucketed(index, prefix, k=3, n_buckets=8)
-    pq_idx = str(tmp_path / "pq_idx")
-    build_dedup_index(index, pq_idx, k=3)
-
-    with delta_dedup_gate(delta, index, k=3, threshold=0.5) as d:
-        inline = sorted(map(tuple, d.collect()))
-    with delta_dedup_gate_bucketed(delta, prefix, threshold=0.5) as d:
-        assert sorted(map(tuple, d.collect())) == inline
-    # cap engaged hard: still identical to the inline window semantics
-    with delta_dedup_gate(delta, index, k=3, threshold=0.5, max_bucket=1) as d:
-        inline_cap = sorted(map(tuple, d.collect()))
-    with delta_dedup_gate_bucketed(delta, prefix, threshold=0.5, max_bucket=1) as d:
-        assert sorted(map(tuple, d.collect())) == inline_cap
-
-    def exchanges(decision) -> tuple[int, str]:
-        decision.collect()
-        plan = decision.df._jdf.queryExecution().executedPlan().toString()
-        return (
-            len(
-                re.findall(
-                    r"Exchange (?:hashpartitioning|rangepartitioning|"
-                    r"SinglePartition)",
-                    plan,
-                )
-            ),
-            plan,
-        )
-
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        with delta_dedup_gate_bucketed(delta, prefix, threshold=0.5) as d:
-            n_bkt, plan_bkt = exchanges(d)
-        with delta_dedup_gate_indexed(delta, pq_idx, threshold=0.5) as d:
-            n_pq, _ = exchanges(d)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    assert "Bucketed: true" in plan_bkt, "bands/shingles scans must bucket"
-    assert n_bkt < n_pq, (
-        f"bucketed gate must co-locate (got {n_bkt} exchanges vs "
-        f"parquet {n_pq})"
-    )
-
-
-def test_bucketed_build_rejects_qualified_prefix(spark):
-    """ADVICE r11 item 4a: the prefix names warehouse DIRECTORIES, so a
-    db-qualified (or otherwise non-identifier) prefix would desync the
-    catalog drop from the directory cleanup — rejected up front."""
-    import pytest
-
-    from dionysus_rb_spark.operators.minhash import (
-        build_dedup_index_bucketed,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "some words here")], "doc_id long, text string"
-    )
-    for bad in ("db.prefix", "", "pfx-dash", "pfx/slash"):
-        with pytest.raises(ValueError, match="unqualified identifier"):
-            build_dedup_index_bucketed(docs, bad, k=3, n_buckets=2)
-
-
-def test_bucketed_build_spares_custom_location_table_data(spark, tmp_path):
-    """ADVICE r11 item 4b: a pre-existing CUSTOM-LOCATION table that
-    happens to share a target name is dropped from the catalog (the
-    name must be free for the rebuild) but its data directory is NOT
-    deleted — the old unconditional warehouse-path delete could destroy
-    unrelated data. The rebuild still lands a working index."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from dionysus_rb_spark.operators.minhash import (
-        build_dedup_index_bucketed,
-        delta_dedup_gate,
-        delta_dedup_gate_bucketed,
-    )
-
-    prefix = "t_bkt_custloc"
-    custom = str(tmp_path / "precious_external_data")
-    spark.sql(f"DROP TABLE IF EXISTS {prefix}_bands")
-    spark.createDataFrame([(1,)], "x int").write.option(
-        "path", custom
-    ).saveAsTable(f"{prefix}_bands")
-    assert os.path.isdir(custom)
-
-    index = spark.createDataFrame(
-        [
-            (1, "alpha0 beta1 gamma2 delta3 epsilon4 zeta5 eta6 theta7"),
-            (2, "unrelated corpus filler text sharing nothing at all"),
-        ],
-        "doc_id long, text string",
-    )
-    build_dedup_index_bucketed(index, prefix, k=3, n_buckets=2)
-    assert os.path.isdir(custom) and any(
-        n.endswith(".parquet") for n in os.listdir(custom)
-    ), "custom-location table data must survive the rebuild"
-
-    delta = spark.createDataFrame(
-        [(10, "alpha0 beta1 gamma2 delta3 epsilon4 zeta5 eta6 theta7")],
-        "doc_id long, text string",
-    )
-    with delta_dedup_gate(delta, index, k=3, threshold=0.5) as d:
-        want = sorted(map(tuple, d.collect()))
-    with delta_dedup_gate_bucketed(delta, prefix, threshold=0.5) as d:
-        assert sorted(map(tuple, d.collect())) == want
-    # second rebuild over its own managed tables still works (the
-    # managed-path delete path)
-    build_dedup_index_bucketed(index, prefix, k=3, n_buckets=2)
-    with delta_dedup_gate_bucketed(delta, prefix, threshold=0.5) as d:
-        assert sorted(map(tuple, d.collect())) == want
-    for suffix in ("_bands", "_shingles", "_meta"):
-        spark.sql(f"DROP TABLE IF EXISTS {prefix}{suffix}")
+    assert result(2) == inline_by_cap[2]
+    assert "Window" in plan()  # the fallback really is the window
 
 
 def test_segment_tag_exclusion_is_exact_not_suffix(spark, tmp_path):

@@ -82,3 +82,25 @@ def test_runtime_confs_healed(hostile):
     for k, v in RUNTIME_CONFS.items():
         assert hostile.conf.get(k) == v, f"{k} not healed on external session"
     assert hostile.conf.get("spark.sql.shuffle.partitions") == "3"
+
+
+def test_extra_confs_may_not_override_runtime_confs(spark):
+    """get_spark applies ``extra_confs`` after RUNTIME_CONFS, so a shared
+    key would silently replace a semantics-bearing conf (here ANSI mode)
+    — the call must refuse it before touching any session. Every
+    RUNTIME_CONFS value is restored afterwards in case an older build
+    let the override through."""
+    from dionysus_rb_spark.session import get_spark
+
+    before = {k: spark.conf.get(k) for k in RUNTIME_CONFS}
+    try:
+        with pytest.raises(ValueError, match="spark.sql.ansi.enabled"):
+            get_spark(
+                extra_confs={
+                    "spark.sql.ansi.enabled": "false",
+                    "spark.eventLog.compress": "false",
+                }
+            )
+    finally:
+        for k, v in before.items():
+            spark.conf.set(k, v)

@@ -104,8 +104,9 @@ def _word(h):
 
 def build_corpus(spark, out: Path, n_docs: int = N_DOCS) -> None:
     """Write the realistic 500k-shape corpus (distributed generation,
-    no driver loops) to ``out/documents.parquet``. Shared with
-    simhash_width.py so the width study runs on the identical corpus."""
+    no driver loops) to ``out/documents.parquet``. The SimHash width
+    study (tools/validation/simhash_width.py @ 6813648) ran on this
+    identical corpus."""
     ids = spark.range(n_docs).withColumnRenamed("id", "doc_id")
     in_group = F.col("doc_id") < N_DUP_GROUPS * GROUP
     group = (F.col("doc_id") / GROUP).cast("long")
