@@ -159,6 +159,10 @@ class DeserializedEntity:
     relationship: str  # "root" | "has_one" | "has_many"
     parent_entity: str | None
     frame: DataFrame
+    # has_many only: ``__parent_id`` of every parent row whose list is
+    # present — an empty list included, a NULL list not — i.e. the
+    # parents whose stored child set J4 reconciles
+    parent_ids: DataFrame | None = None
 
 
 def deserialize(
@@ -193,6 +197,9 @@ def deserialize(
         if isinstance(dt, ArrayType):
             child_entity = singularize(name, cfg.singular_overrides)
             child_schema: StructType = dt.elementType  # type: ignore[assignment]
+            parent_ids = df.filter(record.getField(name).isNotNull()).select(
+                record.getField("id").alias("__parent_id")
+            )
             child_df = df.select(
                 record.getField("id").alias("__parent_id"),
                 F.explode_outer(record.getField(name)).alias(record_col),
@@ -206,6 +213,7 @@ def deserialize(
                         "has_many" if sub.relationship == "root" else sub.relationship,
                         entity if sub.relationship == "root" else sub.parent_entity,
                         sub.frame,
+                        parent_ids if sub.relationship == "root" else sub.parent_ids,
                     )
                 )
         else:
@@ -239,6 +247,7 @@ def deserialize(
                             "has_one" if sub.relationship == "root" else sub.relationship,
                             entity if sub.relationship == "root" else sub.parent_entity,
                             sub.frame,
+                            sub.parent_ids,
                         )
                     )
     return out

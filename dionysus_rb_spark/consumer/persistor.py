@@ -20,10 +20,13 @@ from pyspark.sql.types import StructType
 from ..consumer.deserializer import (
     DeserializerConfig,
     _sideload_fields,
+    _timestampify,
     canonical_columns,
     deserialize,
 )
+from ..operators.dedup import keep_latest
 from ..operators.events import dispatch_events, parse_event_name
+from ..operators.merge import reconcile_to_many
 from ..sources.envelope import decode_envelope
 from ..streaming.snapshot_store import SnapshotStore
 
@@ -54,21 +57,49 @@ def persist_batch(
     names go to the dead-letter store (T9, F4).
 
     J4 runs after each has_many upsert: a parent's aggregate payload is
-    authoritative for its child set, so stored children of the batch's
-    parents that the payload no longer lists are deleted
-    (persistor.rb:128-151's ``where.not(id: ids)``)."""
+    authoritative for its child set, so stored children the list no
+    longer names are deleted (persistor.rb:128-151's
+    ``where.not(id: ids)``) for every parent whose list is present, an
+    emptied list included.
+
+    Several versions of one record in a batch are narrowed to one up
+    front, and that row feeds both the root MERGE and its children, so
+    the stored parent and its child set always come from the same
+    version. The choice is A1 keep-latest (newest ``updated_at``; on a
+    tie the lowest Kafka ``offset`` when ``raw`` carries one, then the
+    event name and the record itself), so a replay picks the same row."""
     cfg = cfg or DeserializerConfig()
     result = PersistResult()
 
     has_key = "key" in raw.columns
-    decoded = decode_envelope(
-        raw, snapshot_schema, keep_cols=("key",) if has_key else ()
-    )
+    keep_cols = tuple(c for c in ("key", "offset") if c in raw.columns)
+    decoded = decode_envelope(raw, snapshot_schema, keep_cols=keep_cols)
     _, action = parse_event_name(F.col("event"))
     decoded = decoded.withColumn("__action", action).cache()
+    latest = None
     try:
         known, unknown = dispatch_events(
             decoded.filter(F.col("record").isNotNull()), "__action"
+        )
+        ts = (
+            _timestampify(F.col("record.updated_at"), snapshot_schema["updated_at"].dataType)
+            if "updated_at" in snapshot_schema.fieldNames()
+            else F.lit(None).cast("timestamp")
+        )
+        offset = ["offset"] if "offset" in raw.columns else []
+        latest = (
+            keep_latest(
+                # not the envelope ``value``: one envelope may carry
+                # hundreds of records, and each row would copy it
+                known.select(*offset, "event", "record", "__action").withColumns(
+                    {"__pid": F.col("record.id"), "__ts": ts, "__json": F.to_json("record")}
+                ),
+                ["__pid"],
+                "__ts",
+                [*offset, "event", "__json"],
+            )
+            .drop("__pid", "__ts", "__json")
+            .cache()
         )
         if dead_letter_store is not None:
             # T9/F4 dead letters: unknown event names, plus payloads the
@@ -88,7 +119,7 @@ def persist_batch(
         # root frame: canonical columns + the event action driving the
         # created/updated/destroyed MERGE branches
         sideloads = set(_sideload_fields(snapshot_schema))
-        root = known.select(
+        root = latest.select(
             F.col("__action").alias("event"),
             *canonical_columns(F.col("record"), snapshot_schema, entity, cfg, sideloads),
         )
@@ -132,7 +163,7 @@ def persist_batch(
         # children: upserts, then J4 reconciliation for has_many (the
         # parent payload is authoritative for its child id set)
         for ent in deserialize(
-            known, snapshot_schema, entity, cfg, polymorphic_types=polymorphic_types
+            latest, snapshot_schema, entity, cfg, polymorphic_types=polymorphic_types
         ):
             if ent.relationship == "root" or ent.entity not in sinks:
                 continue
@@ -145,12 +176,14 @@ def persist_batch(
             if ent.relationship == "has_many":
                 current = store.read(spark)
                 if current is not None and "synced_parent_id" in current.columns:
-                    parents = frame.select("synced_parent_id").distinct()
-                    payload_ids = frame.select("synced_parent_id", cfg.synced_id)
-                    stale = current.join(
-                        F.broadcast(parents), "synced_parent_id", "left_semi"
-                    ).join(
-                        payload_ids, ["synced_parent_id", cfg.synced_id], "left_anti"
+                    parents = ent.parent_ids.select(
+                        F.col("__parent_id").alias("synced_parent_id")
+                    ).distinct()
+                    stale = reconcile_to_many(
+                        current.join(F.broadcast(parents), "synced_parent_id", "left_semi"),
+                        frame.select("synced_parent_id", cfg.synced_id),
+                        "synced_parent_id",
+                        cfg.synced_id,
                     )
                     if stale.limit(1).count():
                         store.merge(
@@ -166,5 +199,7 @@ def persist_batch(
                     r["__entity"], 0
                 ) + int(r["count"])
     finally:
+        if latest is not None:
+            latest.unpersist()
         decoded.unpersist()
     return result

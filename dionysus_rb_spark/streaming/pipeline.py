@@ -123,19 +123,17 @@ def run_foreach_batch(
     checkpoint: str,
     batch_fn: Callable[[DataFrame, int], None],
     available_now: bool = True,
-    processing_time: str | None = None,
 ) -> StreamingQuery:
     """foreachBatch runner: checkpointed, availableNow for backfill
-    catch-up (T6) or processing-time trigger for continuous runs. The
-    batch_fn must be idempotent (T1: at-least-once delivery into an
-    idempotent MERGE = effectively exactly-once)."""
+    catch-up (T6) or Spark's default trigger (next batch as soon as the
+    previous one commits) for continuous runs. The batch_fn must be
+    idempotent (T1: at-least-once delivery into an idempotent MERGE =
+    effectively exactly-once)."""
     writer = source.writeStream.foreachBatch(batch_fn).option(
         "checkpointLocation", checkpoint
     )
     if available_now:
         writer = writer.trigger(availableNow=True)
-    elif processing_time:
-        writer = writer.trigger(processingTime=processing_time)
     return writer.start()
 
 

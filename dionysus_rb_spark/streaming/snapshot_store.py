@@ -1,17 +1,28 @@
-"""Versioned parquet snapshot store — the MERGE target.
+"""Versioned parquet snapshot stores — the MERGE target.
 
 The reference's consumer target table (the "world model" the upsert
 maintains, persistor.rb) maps to a lakehouse table we MERGE into. Delta
-isn't available in this container, so this store implements the same
+isn't available in this container, so the stores implement the same
 contract on plain parquet: versioned directories + an atomic pointer
-file, merge = guarded_merge + full rewrite of the new version.
+file.
 
-On a real cluster this class is swapped for ``DeltaTable.merge`` (or
-Iceberg MERGE INTO): the transform logic (operators/merge.py) is
-identical — only the physical commit differs. The rewrite here is
-O(table) per batch, which is exactly the trade Delta's copy-on-write
-makes per touched file; partitioning the store by a stable key prefix
-(``partition_by``) bounds the rewrite to touched partitions at scale.
+Every merge follows one protocol, whatever the layout:
+
+1. read the slice of the store the batch can touch;
+2. ``guarded_merge`` the batch into that slice — the only write
+   decision; an empty slice (a first write) merges against an empty
+   frame, which Catalyst folds to the batch side;
+3. commit the merged slice into a new version dir, swap the pointer;
+4. GC: delete version dirs the pointer no longer references, keeping
+   the newest ``GC_GRACE`` unreferenced ones for in-flight readers.
+
+A layout only chooses the slice (step 1) and the commit (step 3). The
+plain store's slice is the whole table; the bucketed store's is the
+buckets the batch's keys hash to.
+
+On a real cluster this is swapped for ``DeltaTable.merge`` (or Iceberg
+MERGE INTO): the transform logic (operators/merge.py) is identical —
+only the physical commit differs.
 """
 
 from __future__ import annotations
@@ -22,11 +33,18 @@ import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from ..operators.merge import guarded_merge
 
+# unreferenced version dirs kept after a commit, newest first
+GC_GRACE = 2
+
 
 class SnapshotStore:
+    """Whole-table layout: each commit rewrites the table — Delta's
+    copy-on-write trade at table granularity, O(table) per batch."""
+
     def __init__(self, path: str, key: str = "synced_id"):
         self.path = path
         self.key = key
@@ -36,11 +54,20 @@ class SnapshotStore:
     def _pointer(self) -> str:
         return os.path.join(self.path, "_CURRENT")
 
-    def current_version(self) -> str | None:
+    def _read_pointer(self) -> dict:
         if not os.path.exists(self._pointer):
-            return None
+            return {}
         with open(self._pointer) as f:
-            return json.load(f)["version"]
+            return json.load(f)
+
+    def _write_pointer(self, data: dict) -> None:
+        tmp = self._pointer + ".tmp"
+        with open(tmp, "w") as f:
+            json.dump(data, f)
+        os.replace(tmp, self._pointer)  # atomic pointer swap
+
+    def current_version(self) -> str | None:
+        return self._read_pointer().get("version")
 
     def read(self, spark: SparkSession) -> DataFrame | None:
         v = self.current_version()
@@ -64,89 +91,84 @@ class SnapshotStore:
         self,
         spark: SparkSession,
         batch: DataFrame,
-        event_col: str = "event",
-        source_updated: str = "synced_updated_at",
-        target_updated: str = "synced_updated_at",
-        canceled_col: str | None = "synced_canceled_at",
         order_tiebreak: str | None = None,
     ) -> None:
         """Idempotent guarded MERGE of one (micro-)batch. Replaying a
-        batch yields the same state (F1 guard + keep-latest), which is
-        what makes foreachBatch at-least-once effectively exactly-once
-        (SURVEY §2.10 T1)."""
-        from pyspark.sql import functions as F
-
+        batch yields the same state (F1 guard + keep-latest), and the
+        state does not depend on how events split into batches — which
+        is what makes foreachBatch at-least-once effectively
+        exactly-once (SURVEY §2.10 T1)."""
         # entities without soft-delete / update-timestamp columns degrade
         # gracefully (FIXTURES.md §4's column-less variants)
-        if canceled_col is not None and canceled_col not in batch.columns:
-            canceled_col = None
-        if source_updated not in batch.columns:
-            batch = batch.withColumn(source_updated, F.lit(None).cast("timestamp"))
-        target = self.read(spark)
+        canceled_col = (
+            "synced_canceled_at" if "synced_canceled_at" in batch.columns else None
+        )
+        if "synced_updated_at" not in batch.columns:
+            batch = batch.withColumn("synced_updated_at", F.lit(None).cast("timestamp"))
+        target, scope = self._slice(spark, batch)
         if target is None:
-            # bootstrap: batch IS the initial state (minus destroys)
-            from ..operators.dedup import keep_latest
-            from pyspark.sql import functions as F
-
-            first = keep_latest(
-                batch, [self.key], source_updated,
-                [order_tiebreak] if order_tiebreak else (),
-            )
-            live = first.filter(F.col(event_col) != "destroyed").drop(event_col)
-            self._commit(live)
-            return
+            # limit(0) becomes an empty LocalRelation, which Catalyst
+            # folds out of the join; createDataFrame([]) is an RDD scan
+            # and would keep the full outer join
+            target = batch.drop("event").limit(0)
         merged = guarded_merge(
             target,
             batch,
             key=self.key,
-            event_col=event_col,
-            source_updated=source_updated,
-            target_updated=target_updated,
             canceled_col=canceled_col,
             order_tiebreak=order_tiebreak,
         )
-        self._commit(merged)
+        self._commit(merged, scope)
 
-    def _commit(self, df: DataFrame) -> None:
-        version = f"v{int(time.time() * 1000)}_{os.getpid()}"
-        out = os.path.join(self.path, version)
-        df.write.mode("overwrite").parquet(out)
-        tmp = self._pointer + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"version": version}, f)
-        os.replace(tmp, self._pointer)  # atomic pointer swap
-        self._gc(keep=3)
+    def _slice(
+        self, spark: SparkSession, batch: DataFrame
+    ) -> tuple[DataFrame | None, list[int] | None]:
+        """The rows ``batch`` can touch (None when there are none) and
+        the commit scope that replaces them: here, the whole table."""
+        return self.read(spark), None
 
-    def _gc(self, keep: int) -> None:
-        versions = sorted(
-            d for d in os.listdir(self.path)
-            if d.startswith("v") and os.path.isdir(os.path.join(self.path, d))
+    def _new_version_dir(self) -> str:
+        return f"v{int(time.time() * 1000)}_{os.getpid()}"
+
+    def _commit(self, df: DataFrame, scope: list[int] | None = None) -> None:
+        version = self._new_version_dir()
+        df.write.mode("overwrite").parquet(os.path.join(self.path, version))
+        self._write_pointer({"version": version})
+        self._gc()
+
+    def _referenced(self) -> set[str]:
+        return {self.current_version()} - {None}
+
+    def _gc(self) -> None:
+        referenced = self._referenced()
+        stale = sorted(
+            d
+            for d in os.listdir(self.path)
+            if d.startswith("v")
+            and d not in referenced
+            and os.path.isdir(os.path.join(self.path, d))
         )
-        current = self.current_version()
-        for d in versions[:-keep]:
-            if d != current:
-                shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
+        for d in stale[:-GC_GRACE]:
+            shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
 
 
 class BucketedSnapshotStore(SnapshotStore):
-    """Key-bucketed snapshot store: MERGE cost ∝ touched buckets.
+    """Key-bucketed layout: MERGE cost ∝ touched buckets.
 
-    The plain store rewrites the whole table per batch — Delta's
-    copy-on-write trade at file granularity, here at table granularity.
-    This variant hashes the merge key into ``num_buckets`` partitions;
-    a batch only reads + rewrites the buckets its keys land in, and the
-    manifest (bucket -> current file set) swaps atomically. With
+    The merge key hashes into ``num_buckets`` partitions. A batch's slice
+    is the buckets its keys land in (one distinct-bucket collect), and
+    its commit writes only those buckets and repoints their entries in
+    the manifest (bucket -> current dir), which swaps atomically. With
     num_buckets sized so each bucket ≈ a Delta file group, this IS the
     bounded-rewrite behavior `MERGE INTO` gives on a lakehouse — per
-    micro-batch cost tracks batch size, not table size, which is the
-    property that keeps the consumer viable at 100 TB state.
+    micro-batch cost tracks batch size, not table size.
 
     Note on co-location: plain parquet reads carry no bucketing metadata,
     so the merge join still exchanges the (touched-bucket subset of the)
     target. What this layout bounds is IO and rewrite volume; to also
     skip the target-side exchange on a cluster, register the store as a
     Hive-bucketed table (``bucketBy(n, key).saveAsTable``) or use a
-    lakehouse MERGE — the transform logic here is unchanged either way.
+    lakehouse MERGE — the transform logic is unchanged either way.
     """
 
     def __init__(self, path: str, key: str = "synced_id", num_buckets: int = 16):
@@ -154,48 +176,36 @@ class BucketedSnapshotStore(SnapshotStore):
         self.num_buckets = num_buckets
 
     def _bucket_expr(self):
-        from pyspark.sql import functions as F
-
         return F.pmod(F.xxhash64(F.col(self.key)), self.num_buckets).cast("int")
 
     def _manifest(self) -> dict[str, str]:
-        if not os.path.exists(self._pointer):
-            return {}
-        with open(self._pointer) as f:
-            data = json.load(f)
-        return data.get("buckets", {})
-
-    def _write_manifest(self, buckets: dict[str, str]) -> None:
-        tmp = self._pointer + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"buckets": buckets}, f)
-        os.replace(tmp, self._pointer)  # atomic swap
-
-    def current_version(self) -> str | None:  # pragma: no cover - compat shim
-        return "bucketed" if self._manifest() else None
+        return self._read_pointer().get("buckets", {})
 
     def read(self, spark: SparkSession, buckets: list[int] | None = None) -> DataFrame | None:
         manifest = self._manifest()
-        if not manifest:
-            return None
         wanted = (
             [str(b) for b in buckets if str(b) in manifest]
             if buckets is not None
             else list(manifest)
         )
-        paths = [os.path.join(self.path, manifest[b]) for b in wanted]
-        if not paths:
+        if not wanted:
             return None
-        return spark.read.parquet(*paths)
+        return spark.read.parquet(*[os.path.join(self.path, manifest[b]) for b in wanted])
 
-    def overwrite(self, df: DataFrame) -> None:
-        self._commit_buckets(df, touched=None)
+    def _slice(
+        self, spark: SparkSession, batch: DataFrame
+    ) -> tuple[DataFrame | None, list[int] | None]:
+        touched = [
+            r["__b"]
+            for r in batch.select(self._bucket_expr().alias("__b")).distinct().collect()
+        ]
+        return self.read(spark, buckets=touched), touched
 
-    def _commit_buckets(self, df: DataFrame, touched: list[int] | None) -> None:
+    def _commit(self, df: DataFrame, scope: list[int] | None = None) -> None:
         """Write ``df`` partitioned by bucket into a new version dir and
-        repoint only the affected manifest entries (all, if touched is
-        None)."""
-        version = f"v{int(time.time() * 1000)}_{os.getpid()}"
+        repoint the ``scope`` buckets' manifest entries; ``scope=None``
+        replaces the table."""
+        version = self._new_version_dir()
         out = os.path.join(self.path, version)
         (
             df.withColumn("__bucket", self._bucket_expr())
@@ -209,74 +219,17 @@ class BucketedSnapshotStore(SnapshotStore):
             for d in os.listdir(out)
             if d.startswith("__bucket=")
         }
-        if touched is None:  # full replace
-            self._write_manifest(written)
-            self._gc_unreferenced()
-            return
-        manifest = self._manifest()
-        for b in {str(b) for b in touched}:
-            if b in written:
-                manifest[b] = written[b]
-            else:
-                manifest.pop(b, None)  # bucket fully deleted
-        self._write_manifest(manifest)
-        self._gc_unreferenced()
+        if scope is None:
+            manifest = written
+        else:
+            manifest = self._manifest()
+            for b in {str(b) for b in scope}:
+                if b in written:
+                    manifest[b] = written[b]
+                else:
+                    manifest.pop(b, None)  # the merge emptied the bucket
+        self._write_pointer({"buckets": manifest})
+        self._gc()
 
-    def _gc_unreferenced(self, keep_newest: int = 2) -> None:
-        """Remove version dirs no manifest entry references (each merge
-        writes a new dir for its touched buckets; superseded dirs leak
-        otherwise). The newest few unreferenced dirs are kept as a grace
-        window for in-flight readers."""
-        referenced = {p.split(os.sep, 1)[0] for p in self._manifest().values()}
-        versions = sorted(
-            d
-            for d in os.listdir(self.path)
-            if d.startswith("v") and os.path.isdir(os.path.join(self.path, d))
-        )
-        stale = [d for d in versions if d not in referenced]
-        for d in stale[:-keep_newest] if keep_newest else stale:
-            shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
-
-    def merge(
-        self,
-        spark: SparkSession,
-        batch: DataFrame,
-        event_col: str = "event",
-        source_updated: str = "synced_updated_at",
-        target_updated: str = "synced_updated_at",
-        canceled_col: str | None = "synced_canceled_at",
-        order_tiebreak: str | None = None,
-    ) -> None:
-        from pyspark.sql import functions as F
-
-        from ..operators.dedup import keep_latest
-
-        if canceled_col is not None and canceled_col not in batch.columns:
-            canceled_col = None
-        if source_updated not in batch.columns:
-            batch = batch.withColumn(source_updated, F.lit(None).cast("timestamp"))
-
-        touched = [
-            r["__b"]
-            for r in batch.select(self._bucket_expr().alias("__b")).distinct().collect()
-        ]
-        target = self.read(spark, buckets=touched)
-        if target is None:
-            first = keep_latest(
-                batch, [self.key], source_updated,
-                [order_tiebreak] if order_tiebreak else (),
-            )
-            live = first.filter(F.col(event_col) != "destroyed").drop(event_col)
-            self._commit_buckets(live, touched=touched)
-            return
-        merged = guarded_merge(
-            target,
-            batch,
-            key=self.key,
-            event_col=event_col,
-            source_updated=source_updated,
-            target_updated=target_updated,
-            canceled_col=canceled_col,
-            order_tiebreak=order_tiebreak,
-        )
-        self._commit_buckets(merged, touched=touched)
+    def _referenced(self) -> set[str]:
+        return {p.split(os.sep, 1)[0] for p in self._manifest().values()}

@@ -201,12 +201,25 @@ def test_genesis_roundtrip(spark, tmp_path):
 
 
 def test_bucketed_store_matches_plain_and_prunes(spark, tmp_path):
-    """The bucketed store produces byte-identical state to the plain one
-    while rewriting ONLY the buckets a batch touches."""
+    """The bucketed store produces the plain store's state at every
+    bucket count — soft destroys of unseen keys insert the canceled row
+    whether or not the store (or the key's bucket) is empty — while
+    rewriting ONLY the buckets a batch touches.
+
+    Runs ~25 s on 4 cores: twelve merges at ~2 s of Spark job overhead
+    each, most of them the four stores taking each batch."""
+    import os
+    from datetime import datetime
+
     from dionysus_rb_spark.streaming.snapshot_store import BucketedSnapshotStore
 
     plain = SnapshotStore(str(tmp_path / "plain"))
-    bucketed = BucketedSnapshotStore(str(tmp_path / "bucketed"), num_buckets=8)
+    bucketed = {
+        n: BucketedSnapshotStore(str(tmp_path / f"bucketed{n}"), num_buckets=n)
+        for n in (1, 4, 16)
+    }
+    stores = [plain, *bucketed.values()]
+    pruned = bucketed[16]
 
     def batch(rows):
         return spark.createDataFrame(
@@ -215,63 +228,76 @@ def test_bucketed_store_matches_plain_and_prunes(spark, tmp_path):
             "synced_canceled_at TIMESTAMP, event STRING",
         )
 
-    from datetime import datetime
-
-    b1 = batch(
-        [(i, datetime(2024, 1, 1, 10), float(i), None, "created") for i in range(1, 21)]
-    )
-    for s in (plain, bucketed):
-        s.merge(spark, b1)
-    manifest_before = dict(bucketed._manifest())
-
-    # second batch: update key 5, destroy key 6 (hard), insert key 100
-    b2 = batch(
-        [
-            (5, datetime(2024, 1, 2, 10), 55.0, None, "updated"),
-            (6, datetime(2024, 1, 2, 10), None, None, "destroyed"),
-            (100, datetime(2024, 1, 2, 10), 100.0, None, "created"),
-        ]
-    )
-    for s in (plain, bucketed):
-        s.merge(spark, b2)
+    def day(d):
+        return datetime(2024, 1, d, 10)
 
     def state(s):
         return {
-            r["synced_id"]: (r["synced_updated_at"], r["val"])
+            r["synced_id"]: (r["synced_updated_at"], r["val"], r["synced_canceled_at"])
             for r in s.read(spark).collect()
         }
 
-    assert state(plain) == state(bucketed)
-    assert len(state(bucketed)) == 20  # 20 - 1 destroyed + 1 inserted
+    def merge_all(b):
+        for s in stores:
+            s.merge(spark, b)
+        want = state(plain)
+        for n, s in bucketed.items():
+            assert state(s) == want, f"num_buckets={n}"
+        return want
+
+    # first write: creates plus a soft destroy of the unseen key 50
+    b1 = batch(
+        [(i, day(1), float(i), None, "created") for i in range(1, 21)]
+        + [(50, day(1), 50.0, day(1), "destroyed")]
+    )
+    assert merge_all(b1)[50] == (day(1), 50.0, day(1))
+    manifest_before = dict(pruned._manifest())
+
+    # update 5, hard-destroy 6, soft-destroy 7, stale update of 8,
+    # restore 50, insert 100, soft-destroy the unseen key 200
+    b2 = batch(
+        [
+            (5, day(2), 55.0, None, "updated"),
+            (6, day(2), None, None, "destroyed"),
+            (7, day(2), 7.0, day(2), "destroyed"),
+            (8, datetime(2023, 12, 31, 10), 88.0, None, "updated"),
+            (50, day(2), 51.0, None, "updated"),
+            (100, day(2), 100.0, None, "created"),
+            (200, day(2), 200.0, day(2), "destroyed"),
+        ]
+    )
+    got = merge_all(b2)
+    assert len(got) == 22  # 21 - 1 hard-destroyed + 100 + 200
+    assert got[5] == (day(2), 55.0, None)
+    assert 6 not in got
+    assert got[7] == (day(2), 7.0, day(2))
+    assert got[8] == (day(1), 8.0, None)  # stale update rejected
+    assert got[50] == (day(2), 51.0, None)  # restored
+    assert got[200] == (day(2), 200.0, day(2))
 
     # pruning: buckets untouched by batch 2 still point at their v1 files
-    manifest_after = bucketed._manifest()
+    manifest_after = pruned._manifest()
     touched = {
         str(r["__b"])
-        for r in b2.select(bucketed._bucket_expr().alias("__b")).distinct().collect()
+        for r in b2.select(pruned._bucket_expr().alias("__b")).distinct().collect()
     }
     for b, path in manifest_before.items():
         if b not in touched:
             assert manifest_after[b] == path, f"untouched bucket {b} was rewritten"
-    assert any(manifest_after[b] != manifest_before.get(b) for b in touched)
+    assert any(manifest_after.get(b) != manifest_before.get(b) for b in touched)
 
     # T1 idempotency on the bucketed path: replaying batch 2 is a no-op
-    bucketed.merge(spark, b2)
-    assert state(plain) == state(bucketed)
+    pruned.merge(spark, b2)
+    assert state(pruned) == got
 
-    # GC: after several merges, unreferenced version dirs are bounded
-    import os
-
-    from datetime import datetime as _dt
-
-    for i in range(4):
-        bucketed.merge(
-            spark, batch([(5, _dt(2024, 1, 3 + i, 10), 60.0 + i, None, "updated")])
-        )
-    referenced = {p.split(os.sep, 1)[0] for p in bucketed._manifest().values()}
+    # GC: three more merges leave three unreferenced version dirs (batch
+    # 2's, then each merge's but the last); GC keeps the newest two
+    for i in range(3):
+        pruned.merge(spark, batch([(5, day(3 + i), 60.0 + i, None, "updated")]))
+    referenced = {p.split(os.sep, 1)[0] for p in pruned._manifest().values()}
     on_disk = {
-        d for d in os.listdir(bucketed.path)
-        if d.startswith("v") and os.path.isdir(os.path.join(bucketed.path, d))
+        d for d in os.listdir(pruned.path)
+        if d.startswith("v") and os.path.isdir(os.path.join(pruned.path, d))
     }
     assert len(on_disk - referenced) <= 2  # grace window only
 
@@ -445,6 +471,66 @@ def test_multi_entity_persist_sideloads(spark, tmp_path):
     )
     items2 = {r["synced_id"]: r["qty"] for r in item_store.read(spark).collect()}
     assert items2 == {11: 5}
+
+    def order_env(event, oid, day, items, total=1.0):
+        return _json.dumps(
+            {
+                "message": [
+                    {
+                        "event": event,
+                        "model_name": "Order",
+                        "data": [
+                            {
+                                "id": oid,
+                                "updated_at": f"2024-01-{day:02d} 10:00:00",
+                                "total": total,
+                                "items": [{"id": i, "qty": q} for i, q in items],
+                            }
+                        ],
+                    }
+                ]
+            }
+        )
+
+    def persist(*envs, offsets=False):
+        rows = [(i, e) for i, e in enumerate(envs)] if offsets else [(e,) for e in envs]
+        persist_batch(
+            spark,
+            spark.createDataFrame(
+                rows, "offset LONG, value STRING" if offsets else "value STRING"
+            ),
+            order_schema,
+            "order",
+            {"order": EntitySink(order_store), "item": EntitySink(item_store)},
+        )
+        return {r["synced_id"]: r["qty"] for r in item_store.read(spark).collect()}
+
+    # two versions of order 1 in one batch: the last version's list wins,
+    # so item 12, listed only by the earlier version, is deleted
+    assert persist(
+        order_env("order_updated", 1, 3, [(11, 6), (12, 7)]),
+        order_env("order_updated", 1, 4, [(11, 8)]),
+        order_env("order_created", 2, 4, [(21, 1)]),
+    ) == {11: 8, 21: 1}
+    # an emptied list reconciles its parent: all of order 1's items go,
+    # order 2 (not in the batch) keeps its own
+    assert persist(order_env("order_updated", 1, 5, [])) == {21: 1}
+
+    # two versions of order 1 at the same updated_at: ONE of them
+    # supplies both the stored order and its items, whatever the row
+    # order, and a replay picks the same one. Without offsets the tie
+    # falls to the record itself (total 2.0 sorts first); with offsets
+    # the lowest offset wins (total 3.0, sent first)
+    v2 = order_env("order_updated", 1, 6, [(32, 2)], total=2.0)
+    v3 = order_env("order_updated", 1, 6, [(31, 1)], total=3.0)
+    for envs, offsets, total, items in [
+        ((v3, v2), False, 2.0, {32: 2}),
+        ((v2, v3), False, 2.0, {32: 2}),  # replay, rows swapped
+        ((v3, v2), True, 3.0, {31: 1}),
+    ]:
+        assert persist(*envs, offsets=offsets) == {**items, 21: 1}
+        got = {r["synced_id"]: r["total"] for r in order_store.read(spark).collect()}
+        assert got[1] == total
 
 
 def test_multi_topic_runner(spark, tmp_path):
